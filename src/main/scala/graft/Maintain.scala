@@ -89,22 +89,14 @@ object Maintain {
         // consume the change feed (O(changes) rewrite)
         val partCol = arg(0, s"the partition column ($mode <partCol> <indexDir>)")
         val indexDir = arg(1, s"the index directory ($mode <partCol> <indexDir>)")
-        val (rebuilt, changed, to) = mode match {
-          case "ivf" =>
-            val s = graft.operators.IvfIndex.sync(spark, table, partCol, indexDir)
-            (s.rebuilt, s.changedRows, s.toVersion)
-          case "pq" =>
-            val s = graft.operators.PqIndex.sync(spark, table, partCol, indexDir)
-            (s.rebuilt, s.changedRows, s.toVersion)
-          case "dedup" =>
-            val s = graft.operators.DedupIndex.sync(spark, table, partCol, indexDir)
-            (s.rebuilt, s.changedDocs, s.toVersion)
-          case _ =>
-            val s = graft.operators.IvfPqIndex.sync(spark, table, partCol, indexDir)
-            (s.rebuilt, s.changedRows, s.toVersion)
-        }
-        Seq(s"""{"op":"$mode-sync","table":$tableJson,"rebuilt":$rebuilt,""" +
-          s""""changedRows":$changed,"toVersion":$to}""")
+        val st = (mode match {
+          case "ivf" => graft.operators.IvfIndex
+          case "pq" => graft.operators.PqIndex
+          case "dedup" => graft.operators.DedupIndex
+          case _ => graft.operators.IvfPqIndex
+        }).sync(spark, table, partCol, indexDir)
+        Seq(s"""{"op":"$mode-sync","table":$tableJson,"rebuilt":${st.rebuilt},""" +
+          s""""changedRows":${st.changedRows},"toVersion":${st.toVersion}}""")
       case "bloom" =>
         val column = arg(0, "the indexed column (bloom <col>)")
         // incremental: existing filters are reused (data files are

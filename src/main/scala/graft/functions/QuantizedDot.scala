@@ -76,49 +76,40 @@ case class QuantizedDot(left: Expression, right: Expression)
   * via SQL/expr. */
 object GraftFunctions {
 
-  /** (name, doc, builder) for every engine expression — single source of
-    * truth shared by [[register]] and [[GraftExtensions]]. */
-  private[functions] val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("graft_dot",
-      "graft_dot(a, b) - exact integer dot product of two bigint arrays.",
+  /** One function's registration: its identifier, an [[ExpressionInfo]]
+    * naming its real implementing class, and its builder. */
+  private def fn(name: String, cls: Class[_ <: Expression], doc: String, arity: Int)(
+      build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, null, name, doc, ""),
       { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "graft_dot takes exactly 2 arguments")
-        QuantizedDot(exprs.head, exprs(1))
-      }),
-    ("graft_minhash",
-      "graft_minhash(sh) - 16 MinHash signatures of a shingle set.",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_minhash takes exactly 1 argument")
-        MinhashSigs(exprs.head)
-      }),
-    ("graft_winnow",
-      "graft_winnow(s) - winnowing fingerprint set of a normalized string.",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_winnow takes exactly 1 argument")
-        WinnowFps(exprs.head)
-      }),
-    ("graft_ngrams3",
-      "graft_ngrams3(toks) - all space-joined word 3-grams of a token array.",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_ngrams3 takes exactly 1 argument")
-        Ngrams3(exprs.head)
-      }),
-    ("graft_ngrams",
-      "graft_ngrams(toks, k) - all space-joined stride-1 word k-grams.",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "graft_ngrams takes exactly 2 arguments")
-        NgramsK(exprs.head, exprs(1))
-      }))
+        require(exprs.length == arity, s"$name takes exactly $arity argument(s)")
+        build(exprs)
+      })
+
+  /** Every engine expression — single source of truth shared by
+    * [[register]] and [[GraftExtensions]]. */
+  private[functions] val all = Seq(
+    fn("graft_dot", classOf[QuantizedDot],
+      "graft_dot(a, b) - exact integer dot product of two bigint arrays.", 2)(
+      e => QuantizedDot(e.head, e(1))),
+    fn("graft_minhash", classOf[MinhashSigs],
+      "graft_minhash(sh) - 16 MinHash signatures of a shingle set.", 1)(
+      e => MinhashSigs(e.head)),
+    fn("graft_winnow", classOf[WinnowFps],
+      "graft_winnow(s) - winnowing fingerprint set of a normalized string.", 1)(
+      e => WinnowFps(e.head)),
+    fn("graft_ngrams3", classOf[Ngrams3],
+      "graft_ngrams3(toks) - all space-joined word 3-grams of a token array.", 1)(
+      e => Ngrams3(e.head)),
+    fn("graft_ngrams", classOf[NgramsK],
+      "graft_ngrams(toks, k) - all space-joined stride-1 word k-grams (k >= 1).", 2)(
+      e => NgramsK(e.head, e(1))))
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    all.foreach { case (name, doc, builder) =>
-      val ident = FunctionIdentifier(name)
-      if (!registry.functionExists(ident)) {
-        registry.registerFunction(ident,
-          new ExpressionInfo(classOf[QuantizedDot].getName, null, name, doc, ""),
-          builder)
-      }
+    all.foreach { case (ident, info, builder) =>
+      if (!registry.functionExists(ident)) registry.registerFunction(ident, info, builder)
     }
   }
 }
@@ -131,12 +122,7 @@ object GraftFunctions {
   * ([[graft.plans.IntervalBinJoinRule]]). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, doc, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[QuantizedDot].getName, null, name, doc, ""),
-        builder))
-    }
+    GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.IntervalBinJoinRule)
   }
 }

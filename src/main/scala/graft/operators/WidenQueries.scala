@@ -23,22 +23,6 @@ import graft.batch.{TypeWidening, Upsert}
   */
 object WidenQueries extends QueryModule {
 
-  // one widened table per (corpus fingerprint), the
-  // PackWriter.ensurePacked memo discipline: bench rounds past the
-  // first measure the mixed-width READ, not the build
-  private val built =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Map[String, (String, String)]]())
-
-  private def fingerprint(s: SparkSession, d: String): String = {
-    val root = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(root)
-    val entries = if (st.isDirectory) fs.listStatus(root).toSeq else Seq(st)
-    entries.map(e => s"${e.getPath.getName}:${e.getLen}:${e.getModificationTime}")
-      .sorted.mkString("|")
-  }
-
   /** Build (once per corpus state) the widened table: wave 1 seeds every
     * priority partition with INT `v`; the column widens to BIGINT (pure
     * metadata — no file rewritten); wave 2 merges genuinely-long values
@@ -47,40 +31,25 @@ object WidenQueries extends QueryModule {
     * mixed-width state actually holds, so the query provably exercises
     * the upcast-union legs every round. */
   private[graft] def ensureWidened(s: SparkSession, d: String): String =
-    built.synchronized {
-      val fp = fingerprint(s, d)
-      val m = Option(built.get(s)).getOrElse(Map.empty[String, (String, String)])
-      m.get(d) match {
-        case Some((oldFp, t)) if oldFp == fp => t
-        case stale =>
-          val root = java.nio.file.Files
-            .createTempDirectory("graft-widen").toString
-          val t = s"$root/orders_w"
-          val orders = graft.core.Tables.orders(s, d)
-            .select(col("o_orderpriority"), col("o_orderkey"),
-              col("o_custkey").cast(IntegerType).as("v"))
-          Upsert.mergeByKey(s, t,
-            orders.filter(col("o_orderkey") % 2 === 0),
-            "o_orderpriority", Seq("o_orderkey"))
-          TypeWidening.widen(s, t, "o_orderpriority", "v", LongType)
-          Upsert.mergeByKey(s, t,
-            orders.filter(col("o_orderkey") % 2 === 1 &&
-                (col("o_orderpriority").startsWith("1") ||
-                  col("o_orderpriority").startsWith("2")))
-              .withColumn("v", col("v").cast(LongType) + 3000000000L),
-            "o_orderpriority", Seq("o_orderkey"))
-          require(TypeWidening.narrowParts(s, t, "o_orderpriority").nonEmpty,
-            "widened oracle table must hold MIXED widths — the untouched " +
-              "partitions stay physically INT until widenmat")
-          stale.foreach { case (_, old) =>
-            val p = new org.apache.hadoop.fs.Path(old).getParent
-            scala.util.Try(
-              p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true))
-          }
-          built.put(s, m.updated(d, (fp, t)))
-          t
-      }
-    }
+    PersistedIndex.memoDir(s, "graft-widen", d, "orders.parquet") { root =>
+      val t = s"$root/orders_w"
+      val orders = graft.core.Tables.orders(s, d)
+        .select(col("o_orderpriority"), col("o_orderkey"),
+          col("o_custkey").cast(IntegerType).as("v"))
+      Upsert.mergeByKey(s, t,
+        orders.filter(col("o_orderkey") % 2 === 0),
+        "o_orderpriority", Seq("o_orderkey"))
+      TypeWidening.widen(s, t, "o_orderpriority", "v", LongType)
+      Upsert.mergeByKey(s, t,
+        orders.filter(col("o_orderkey") % 2 === 1 &&
+            (col("o_orderpriority").startsWith("1") ||
+              col("o_orderpriority").startsWith("2")))
+          .withColumn("v", col("v").cast(LongType) + 3000000000L),
+        "o_orderpriority", Seq("o_orderkey"))
+      require(TypeWidening.narrowParts(s, t, "o_orderpriority").nonEmpty,
+        "widened oracle table must hold MIXED widths — the untouched " +
+          "partitions stay physically INT until widenmat")
+    } + "/orders_w"
 
   val queries: Map[String, Q] = Map(
     "widen_mixed_agg" -> ((s: SparkSession, d: String) =>

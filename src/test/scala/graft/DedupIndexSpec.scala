@@ -79,7 +79,7 @@ class DedupIndexSpec extends SparkSpec {
     Upsert.deleteByKey(spark, t,
       docsDf(Seq(3L)).select("src", "doc_id"), "src", Seq("doc_id"))
     val st = DedupIndex.refresh(spark, t, "src", idx)
-    assert(!st.rebuilt && st.changedDocs == 4L, s"got $st")
+    assert(!st.rebuilt && st.changedRows == 4L, s"got $st")
     // content parity: the refreshed sidecar equals a from-scratch rebuild
     val idx2 = Files.createTempDirectory("dedupidx2-re").toString
     DedupIndex.buildFromTable(spark, t, "src", idx2)
@@ -94,8 +94,8 @@ class DedupIndexSpec extends SparkSpec {
     val changed = before.keySet.union(after.keySet).count { p =>
       before.get(p) != after.get(p)
     }
-    assert(changed <= st.prefixesTouched,
-      s"$changed prefix dirs changed, refresh reported ${st.prefixesTouched}")
+    assert(changed <= st.partsTouched,
+      s"$changed prefix dirs changed, refresh reported ${st.partsTouched}")
     assert(before.keySet.intersect(after.keySet).exists(p =>
         before(p) == after(p)),
       "at least one untouched prefix must remain byte-identical")
@@ -221,6 +221,73 @@ class DedupIndexSpec extends SparkSpec {
     assert(s1.rebuilt, "first sync must build")
     assert(new java.io.File(s"$idx/meta.json").isFile)
     val s2 = DedupIndex.sync(spark, t, "src", idx)
-    assert(!s2.rebuilt && s2.changedDocs == 0L, s"no-op sync at the tip: $s2")
+    assert(!s2.rebuilt && s2.changedRows == 0L, s"no-op sync at the tip: $s2")
+  }
+
+  private def bandSet(d: String): Set[(Long, String)] = {
+    import spark.implicits._
+    spark.read.parquet(s"$d/bands").select("doc_id", "band")
+      .as[(Long, String)].collect().toSet
+  }
+
+  test("a legacy {version, docs} meta still refreshes") {
+    val t = Files.createTempDirectory("dedupidx7").toString + "/t"
+    Upsert.mergeByKey(spark, t, docsDf(0L until 10L), "src", Seq("doc_id"))
+    val idx = Files.createTempDirectory("dedupidx7-idx").toString
+    DedupIndex.buildFromTable(spark, t, "src", idx)
+    // the meta format older dedup indexes wrote: the count under "docs"
+    val v = graft.core.TxnLog.currentVersion(spark, t)
+    val out = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .create(new org.apache.hadoop.fs.Path(s"$idx/meta.json"), true)
+    try out.write(s"""{"version":$v,"docs":10}""".getBytes("UTF-8")) finally out.close()
+    Upsert.mergeByKey(spark, t, docsDf(Seq(100L, 101L)), "src", Seq("doc_id"))
+    val st = DedupIndex.refresh(spark, t, "src", idx)
+    assert(!st.rebuilt && st.changedRows == 2L && st.fromVersion == v, s"got $st")
+    val idx2 = Files.createTempDirectory("dedupidx7-re").toString
+    DedupIndex.buildFromTable(spark, t, "src", idx2)
+    assert(bandSet(idx) == bandSet(idx2), "refresh from a legacy meta must equal a rebuild")
+  }
+
+  test("a refresh that crashed mid-swap is detected and rebuilt, never swept") {
+    val t = Files.createTempDirectory("dedupidx8").toString + "/t"
+    Upsert.mergeByKey(spark, t, docsDf(0L until 20L), "src", Seq("doc_id"))
+    val idx = Files.createTempDirectory("dedupidx8-idx").toString
+    DedupIndex.buildFromTable(spark, t, "src", idx)
+    // new commits arrive, and a refresh of them dies BETWEEN deleting a
+    // live prefix dir and renaming its staged replacement in: the staged
+    // copy is the ONLY surviving image of that prefix's unchanged bands
+    Upsert.mergeByKey(spark, t, docsDf(Seq(100L, 101L)), "src", Seq("doc_id"))
+    val tip = graft.core.TxnLog.currentVersion(spark, t)
+    val victim = new java.io.File(s"$idx/bands").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("bp=")).head
+    val staging = new java.io.File(s"$idx/.refresh-v$tip")
+    assert(staging.mkdirs())
+    assert(victim.renameTo(new java.io.File(staging, victim.getName)),
+      "fixture: move the live prefix into the staging dir (torn swap state)")
+    val st = DedupIndex.refresh(spark, t, "src", idx)
+    assert(st.rebuilt, s"torn swap must force a rebuild: $st")
+    assert(!staging.exists(), "staging debris is swept after the rebuild")
+    val idx2 = Files.createTempDirectory("dedupidx8-re").toString
+    DedupIndex.buildFromTable(spark, t, "src", idx2)
+    assert(bandSet(idx) == bandSet(idx2),
+      "recovered index must equal a clean rebuild — no lost bands")
+    // and the index is caught up: a subsequent refresh is a no-op
+    assert(DedupIndex.refresh(spark, t, "src", idx).changedRows == 0L)
+  }
+
+  test("staging debris at or below the meta version is swept without a rebuild") {
+    val t = Files.createTempDirectory("dedupidx9").toString + "/t"
+    Upsert.mergeByKey(spark, t, docsDf(0L until 10L), "src", Seq("doc_id"))
+    val idx = Files.createTempDirectory("dedupidx9-idx").toString
+    DedupIndex.buildFromTable(spark, t, "src", idx)
+    val v = graft.core.TxnLog.currentVersion(spark, t)
+    // leftovers of a swap that fully installed before meta advanced to v
+    val debris = new java.io.File(s"$idx/.refresh-v$v/bp=zz")
+    assert(debris.mkdirs())
+    val before = bandSet(idx)
+    val st = DedupIndex.refresh(spark, t, "src", idx)
+    assert(!st.rebuilt && st.changedRows == 0L, s"old debris must not rebuild: $st")
+    assert(!new java.io.File(s"$idx/.refresh-v$v").exists(), "old debris is swept")
+    assert(bandSet(idx) == before)
   }
 }

@@ -85,6 +85,35 @@ class GraftTextHashSpec extends SparkSpec {
     assert(mismatches.forall(_ == 0), s"sig mismatches per k: $mismatches")
   }
 
+  test("graft_minhash skips NULL shingles, as the legacy least() fold does") {
+    // NULLs around every shingle set, including the empty one (which then
+    // holds only NULLs and must sign like the empty set: 16 NULL sigs)
+    val df = withToks(texts)
+      .withColumn("sh", expr("array_distinct(graft_ngrams3(toks))"))
+      .withColumn("native", expr("graft_minhash(sh)"))
+      .withColumn("with_nulls", expr(
+        "graft_minhash(concat(array(CAST(NULL AS STRING)), sh, array(CAST(NULL AS STRING))))"))
+    assert(df.filter(not(col("native") <=> col("with_nulls"))).count() == 0)
+  }
+
+  test("graft_ngrams rejects k < 1 at analysis") {
+    for (k <- Seq(0, -1)) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        withToks(texts).select(expr(s"graft_ngrams(toks, $k)")))
+      assert(e.getMessage.contains("k >= 1"), e.getMessage)
+    }
+  }
+
+  test("the function catalog names each graft_* function's real class") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    graft.functions.GraftFunctions.register(spark)
+    val catalog = spark.sessionState.catalog
+    assert(catalog.lookupFunctionInfo(FunctionIdentifier("graft_minhash")).getClassName ==
+      classOf[graft.functions.MinhashSigs].getName)
+    assert(catalog.lookupFunctionInfo(FunctionIdentifier("graft_ngrams")).getClassName ==
+      classOf[graft.functions.NgramsK].getName)
+  }
+
   test("graft_winnow ≡ the interpreted Rabin-Karp/window-min pipeline") {
     val df = withToks(texts :+ "0123456789")   // exactly 10 chars: below 11
       .withColumn("norm",
